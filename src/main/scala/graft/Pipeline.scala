@@ -104,13 +104,19 @@ object Pipeline {
   }
 
   /** Post-load maintenance, gated by the env's ENABLE_OPTIMIZATION flag
-    * (reference dev.py:61/prod.py:64): compaction + clustering rewrite +
-    * retired-version GC. */
+    * (reference dev.py:61/prod.py:64): a clustered compaction commit
+    * (OPTIMIZE ZORDER analogue) + retired-file GC (VACUUM). `tablePath`
+    * must be a [[graft.io.VersionedTable]], e.g. a
+    * [[graft.streaming.Streams.mergeSink]] target. The silver that
+    * [[ingestTransactions]] writes is plain hive-partitioned parquet, not
+    * a versioned table, so it cannot be maintained here (compact throws
+    * `no table at …`). */
   def runMaintenance(spark: SparkSession, env: EnvConfig, tablePath: String,
       clusterCols: Seq[String], targetFiles: Int = 8): Boolean = {
     if (!env.enableOptimization) return false
-    graft.io.Maintenance.clusterBy(spark, tablePath, clusterCols, targetFiles)
-    graft.io.Maintenance.vacuum(tablePath)
+    graft.io.VersionedTable.compact(spark, tablePath, targetFiles,
+      clusterBy = clusterCols)
+    graft.io.VersionedTable.vacuum(tablePath)
     true
   }
 

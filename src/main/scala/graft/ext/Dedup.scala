@@ -132,9 +132,11 @@ object Dedup {
           least(col("n_a"), col("n_b")).cast(DoubleType), 6).as("overlap"))
   }
 
-  /** Per-doc shingle-hash sets (id, shset: array<long>), tokenless docs
-    * dropped. `rlike("\\S")` (≥1 non-whitespace char — the exact
-    * complement of the tokenizer's `\s` class, and false for NULL text)
+  /** Per-doc shingle-hash sets (id, shset: array<long>). Tokenless rows
+    * — empty, whitespace-only or NULL text — are DROPPED, not returned
+    * with an empty set, so they never reach signatures or pairs.
+    * `rlike("\\S")` (≥1 non-whitespace char — the exact complement of
+    * the tokenizer's `\s` class, and false for NULL text)
     * is equivalent to `size(shset) > 0` but runs on the RAW text column:
     * filtering on the computed shset instead would push the predicate
     * below the projection and evaluate the whole gram-hash pipeline

@@ -21,7 +21,7 @@ object Diff {
     * Precondition: `idCol` is UNIQUE within each version — a duplicated
     * id (null included: the join is null-safe, so all null-id rows share
     * one key) pairs many-to-many like any duplicated join key and makes
-    * the statuses meaningless, the same contract [[graft.io.Upsert]]
+    * the statuses meaningless, the same contract [[graft.io.Upsert.merge]]
     * documents for its merge keys. */
   def corpusDiff(oldDf: DataFrame, newDf: DataFrame, idCol: String,
       compareCols: Seq[String]): DataFrame = {

@@ -94,7 +94,8 @@ object TextStats {
     * built every shingle STRING through interpreted per-window lambdas —
     * on the curate rule filter that dominated the whole projection.
     * Values identical to the string form absent a within-doc 64-bit gram
-    * fold collision (the q62/q78 hash-equality caveat). */
+    * fold collision (the q62/q78 hash-equality caveat). NULL text yields
+    * NULL: `repetitionRatio(NULL) = NULL`, not a 0.0 sentinel. */
   def repetitionRatio(text: Column, n: Int = 3): Column =
     org.apache.spark.sql.graftbridge.Bridge.column(
       graft.functions.GramRepetition(

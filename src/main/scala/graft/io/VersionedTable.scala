@@ -11,12 +11,12 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
-import graft.util.Fmt
+import graft.util.{Fmt, Stages}
 
-/** Log-mediated versioned parquet table: the Delta-lake surface the plain
-  * directory-swap [[Upsert]] cannot provide (reference
-  * `src/utils/spark_utils.py:285-344` gets MERGE concurrency + `RESTORE`
-  * history from Delta's transaction log for free).
+/** Log-mediated versioned parquet table: the engine's one storage format,
+  * the Delta-lake surface the reference gets MERGE concurrency, `RESTORE`
+  * history and OPTIMIZE/ZORDER/VACUUM from (reference
+  * `src/utils/spark_utils.py:285-344,519-588`).
   *
   * Layout:
   * {{{
@@ -34,7 +34,7 @@ import graft.util.Fmt
   * every historical version stays readable until [[vacuum]] ages its files
   * out — exactly the Delta time-travel/retention contract.
   *
-  * Concurrency (the reason this exists next to [[Upsert]]):
+  * Concurrency:
   *  - commits publish through a pluggable [[CommitArbiter]] (default:
   *    ATOMIC hard-link/move of a fully-written temp file to the next
   *    version slot — the filesystem arbitrates racing writers, first
@@ -46,7 +46,7 @@ import graft.util.Fmt
   *  - snapshot-replacing commits ([[overwrite]], [[merge]], [[deleteWhere]],
   *    [[restore]], [[compact]]) are OPTIMISTIC: they remember the version
   *    they read, and if anyone commits in between they throw
-  *    [[Upsert.ConcurrentWriteException]] rather than silently dropping the
+  *    [[ConcurrentWriteException]] rather than silently dropping the
   *    interleaved writer's rows (write-serializable, like Delta's
   *    ConcurrentAppendException).
   *
@@ -91,6 +91,13 @@ object VersionedTable {
     case object Serializable extends Isolation
   }
 
+  /** A snapshot-replacing commit lost to an interleaved writer under its
+    * [[Isolation]] level, or a writer could not claim a log slot within
+    * its retries. Nothing was committed: re-read the table and retry
+    * (Delta's ConcurrentModificationException family). */
+  final class ConcurrentWriteException(msg: String)
+    extends RuntimeException(msg)
+
   final case class Commit(
       version: Long,
       ts: Long,
@@ -128,18 +135,6 @@ object VersionedTable {
       cdcAdd: Seq[String] = Nil)
 
   // ---------------------------------------------------------------- log IO
-
-  /** Prop-gated (graft.bench.stages) micro-timer for the write ops'
-    * internal segments: prints `bench-stage vt <op>.<seg> <sec>` so a
-    * per-commit cost regression names its segment (hit-scan vs write vs
-    * CDF capture vs stats vs commit), not just the op total. Zero cost
-    * when the property is unset. */
-  private def opStage[T](op: String, seg: String)(body: => T): T =
-    if (sys.props.get("graft.bench.stages").contains("true")) {
-      val t0 = System.nanoTime()
-      try body finally println("bench-stage vt " + op + "." + seg + " " +
-        Fmt.fmt("%.3f", (System.nanoTime() - t0) / 1e9))
-    } else body
 
   private def logPath(table: String): Path = Paths.get(table, LogDir)
 
@@ -750,7 +745,7 @@ object VersionedTable {
     * [[compact]] first. Optimistic, [[Isolation.WriteSerializable]] by
     * default: interleaved blind appends rebase (the sidecar targets only
     * files that existed at the read version); any other interleaved
-    * writer raises [[Upsert.ConcurrentWriteException]]. */
+    * writer raises [[ConcurrentWriteException]]. */
   def deleteWhereDeferred(spark: SparkSession, table: String,
       cond: org.apache.spark.sql.Column,
       isolation: Isolation = Isolation.WriteSerializable): Commit = {
@@ -1157,7 +1152,7 @@ object VersionedTable {
                 (c.schemaJson.isEmpty || schemaJson.isEmpty ||
                   sameColumnShape(c.schemaJson, schemaJson)))
           if (!blindAppends)
-            throw new Upsert.ConcurrentWriteException(
+            throw new ConcurrentWriteException(
               s"$op read version $rv of $table but version ${next - 1} " +
                 "was committed concurrently; re-read and retry")
         }
@@ -1184,7 +1179,7 @@ object VersionedTable {
       }
       attempt += 1 // lost the slot race (append only) — re-derive and retry
     }
-    throw new Upsert.ConcurrentWriteException(
+    throw new ConcurrentWriteException(
       s"could not claim a log slot for $op on $table after $maxRetries tries")
   }
 
@@ -2134,7 +2129,9 @@ object VersionedTable {
     // the caller's source plan (arbitrary — often itself a join) would
     // re-evaluate per consumer, five times per MERGE (r18 opt)
     val srcKeys = source.select(keys.map(col): _*).distinct().persist()
-    val hitPaths = opStage("merge", "hit-scan") {
+    // segment timers (`bench-stage vt merge.<seg>`): a per-commit cost
+    // regression names its segment, not just the op total
+    val hitPaths = Stages.time("vt", "merge.hit-scan") {
       hitFilePaths(spark, table, st, schema, srcKeys, keys) }
     // conform hit rows to the LOG schema, not the hit files' physical
     // one: under schema evolution an old file lacks newer columns, and
@@ -2182,7 +2179,7 @@ object VersionedTable {
     // file-count discipline: a surgical update is sized to the files it
     // touched (no per-merge fragmentation by shuffle-partition count); a
     // pure-insert merge (no hits) keeps its natural write parallelism
-    val added = opStage("merge", "write") { writeDataFiles(
+    val added = Stages.time("vt", "merge.write") { writeDataFiles(
       if (hitNames.nonEmpty) merged.coalesce(math.max(1, hitNames.size))
       else merged, table) }
     // change capture (CDF): pre-images come from the hit rows whose key
@@ -2193,7 +2190,7 @@ object VersionedTable {
       // an empty source writes nothing (added = Nil) and changes
       // nothing — skip capture rather than read zero parquet paths
       if (!cdfEnabled(st.props) || added.isEmpty) Nil
-      else opStage("merge", "cdf-capture") {
+      else Stages.time("vt", "merge.cdf-capture") {
         val landed = spark.read.option("mergeSchema", "true").parquet(
           added.map(f => Paths.get(table, f).toString): _*)
         // keyJoin (null-safe <=>), like applyChanges' capture: NULL is
@@ -2230,11 +2227,13 @@ object VersionedTable {
       }
     // record the MERGED schema (a source can itself evolve the table —
     // the overwrite-based merge recorded the post-merge shape too)
-    val mergeStats = opStage("merge", "stats") { withSizes(table, added,
-      computeStats(spark, table, added, trackedStatColumns(st))) }
-    val mergeBlooms = opStage("merge", "blooms") { computeBlooms(spark,
-      table, added, trackedBloomColumns(table, st), 0.03) }
-    try opStage("merge", "commit") {
+    val mergeStats = Stages.time("vt", "merge.stats") {
+      withSizes(table, added,
+        computeStats(spark, table, added, trackedStatColumns(st))) }
+    val mergeBlooms = Stages.time("vt", "merge.blooms") {
+      computeBlooms(spark, table, added, trackedBloomColumns(table, st),
+        0.03) }
+    try Stages.time("vt", "merge.commit") {
       commitLoop(table, "merge", added, _ => hitNames, merged.schema.json,
         readVersion = Some(rv),
         // sticky indexing: the rewrite re-records whatever the table

@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Scale note: `partitionBy` on a low-cardinality column (e.g. a date) is the
   * primary pruning lever at 100 TB — a date-filtered query then touches only
   * matching directories. Never partition by a high-cardinality key (file
-  * explosion); bucket or z-order-approximate instead (Maintenance.scala).
+  * explosion); bucket instead, or cluster a versioned table with
+  * `VersionedTable.compact(clusterBy = ..., zorder = true)`.
   */
 object Writers {
 

@@ -328,31 +328,31 @@ object OpsQueries {
       }
     }),
 
-    // EP2 upsertParquet END-TO-END on disk (bootstrap write -> staged
-    // merge -> atomic directory swap, advisory writer lock, observed
-    // merge stats), previously ScalaTest-only: bootstrap the mod-3
-    // survivors partitioned by status, upsert the even-key source
-    // (price+1000, status 'U' — rows MOVE partitions), read the swapped
-    // table back. The '~stats' row hashes the REAL inserted/updated
-    // counts (observed on the staging write, not recounted); the final
-    // state replays q13's merge algebra in the oracle. A partition-value
-    // type corruption, a lost swap, or wrong stats all flip the hash.
+    // EP2 upsert END-TO-END on disk through the versioned table
+    // (bootstrap append -> file-granular MERGE commit -> snapshot read):
+    // bootstrap the mod-3 survivors, merge the even-key source
+    // (price+1000, status 'U' — rows change status), read the merged
+    // snapshot back. The '~stats' row hashes the REAL inserted/updated
+    // counts (Upsert.mergeStats against the pre-merge snapshot); the
+    // final state replays q13's merge algebra in the oracle. A lost
+    // commit, a wrong hit-file rewrite, or wrong stats all flip the hash.
     "q177_upsert_parquet" -> ((s, dir) => {
       val scratch = java.nio.file.Files.createTempDirectory("graft-ep2")
       try {
+        val vt = graft.io.VersionedTable
         val base = t(s, dir, "orders").filter(col("o_orderkey") < 20000)
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"))
         val path = scratch.resolve("t").toString
-        graft.io.Upsert.upsertParquet(s,
-          base.filter(col("o_orderkey") % 3 =!= 0), path,
-          keys = Seq("o_orderkey"), partitionBy = Seq("o_orderstatus"))
-        val stats = graft.io.Upsert.upsertParquet(s,
-          base.filter(col("o_orderkey") % 2 === 0)
-            .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
-            .withColumn("o_orderstatus", lit("U")),
-          path, keys = Seq("o_orderkey"), partitionBy = Seq("o_orderstatus"))
-        val out = s.read.parquet(path)
+        val keys = Seq("o_orderkey")
+        vt.append(s, base.filter(col("o_orderkey") % 3 =!= 0), path)
+        val source = base.filter(col("o_orderkey") % 2 === 0)
+          .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
+          .withColumn("o_orderstatus", lit("U"))
+        val stats = graft.io.Upsert.mergeStats(vt.snapshot(s, path),
+          source, keys)
+        vt.merge(s, source, path, keys)
+        val out = vt.snapshot(s, path)
           .groupBy(col("o_orderstatus").as("bucket"))
           .agg(count(lit(1)).as("n"), sum(col("o_orderkey")).as("key_sum"),
             Q.dsum(col("o_totalprice")).as("total"))
@@ -633,8 +633,8 @@ object OpsQueries {
         |  CAST(SUM(bonus) AS BIGINT) AS bonus_sum
         |FROM u GROUP BY st ORDER BY st""".stripMargin,
 
-    // q13's merge algebra on the on-disk swap path, plus the real
-    // inserted/updated counts in the '~stats' row: inserted = source
+    // q13's merge algebra on the on-disk versioned-table path, plus the
+    // real inserted/updated counts in the '~stats' row: inserted = source
     // keys absent from the bootstrap (even AND mod-3), updated = the
     // rest of the source (even, not mod-3).
     "q177_upsert_parquet" ->

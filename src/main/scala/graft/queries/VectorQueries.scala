@@ -30,15 +30,6 @@ object VectorQueries {
   private def annNprobe: Int = if (annSublinear) 4 else 16
   private def annShortlist: Int = if (annSublinear) 50 else 1000000
 
-  /** Per-query stage-timing hook ("bench-stage <label> <stage> <sec>"
-    * plain-text lines when Bench sets graft.bench.stages; free
-    * otherwise). Plain text above the machine line, never in the JSON. */
-  private def stageHook(label: String): (String, Double) => Unit =
-    if (sys.props.get("graft.bench.stages").exists(_ == "true"))
-      (n, sec) => println(
-        s"bench-stage $label $n " + graft.util.Fmt.fmt("%.3f", sec))
-    else (_, _) => ()
-
   /** Shared trained-codebook memos, keyed by data dir (VERDICT r14 #3):
     * PQ/IVF-PQ training is deterministic (hash-seeded inits, fixed
     * iteration counts), so a trained model is a pure function of
@@ -63,7 +54,7 @@ object VectorQueries {
     ivfpqIndexes.computeIfAbsent(dir, _ =>
       graft.ext.IvfPq.trainIndex(t(s, dir, "embeddings"), "vec_id",
         "embedding", dim = 64, kCells = 16, m = 8, kCodes = 16, iters = 2,
-        onStage = stageHook(label)))
+        onStage = graft.util.Stages.hook(label)))
 
   /** Bench hook (same contract as VersionedQueries.fixtureGroups): force
     * the trained-codebook memos under their own timed keys, so the gate
@@ -155,23 +146,20 @@ object VectorQueries {
       // swing. Training comes from the fx5 memo — in a Bench sweep the
       // fixture already paid for it under its own key; in Verify the
       // first call trains once (same deterministic model, same hashes).
-      val onStage = stageHook("q95")
       val emb = t(s, dir, "embeddings")
       val index = ivfpqIndex(s, dir, "q95")
-      val t0 = System.nanoTime()
-      val encoded = graft.ext.IvfPq.encode(emb, "vec_id", "embedding", index)
-      onStage("encode", (System.nanoTime() - t0) / 1e9)
-      val t1 = System.nanoTime()
-      val out = graft.ext.IvfPq.topK(encoded, emb,
-          emb.filter(col("vec_id") < 8), index,
-          "vec_id", "embedding", k = 5, nprobe = annNprobe,
-          shortlist = annShortlist)
-        .orderBy(col("query_id"), col("rnk"))
-      // the probe+rerank stage is lazy — snapshot it here so its stage
-      // line is real (the gate result is tiny: 40 rows)
-      val pinned = graft.util.Caches.snapshot(out)
-      onStage("probe-rerank", (System.nanoTime() - t1) / 1e9)
-      pinned
+      val encoded = graft.util.Stages.time("q95", "encode") {
+        graft.ext.IvfPq.encode(emb, "vec_id", "embedding", index) }
+      graft.util.Stages.time("q95", "probe-rerank") {
+        val out = graft.ext.IvfPq.topK(encoded, emb,
+            emb.filter(col("vec_id") < 8), index,
+            "vec_id", "embedding", k = 5, nprobe = annNprobe,
+            shortlist = annShortlist)
+          .orderBy(col("query_id"), col("rnk"))
+        // the probe+rerank stage is lazy — snapshot it here so its stage
+        // line is real (the gate result is tiny: 40 rows)
+        graft.util.Caches.snapshot(out)
+      }
     }),
 
     // Product-quantized ANN: 8 codebooks × 16 centroids over 64 dims

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.{VersionedTable => VT}
 import graft.queries.Q.t
+import graft.util.Stages.{time => stage}
 
 /** Driver-gate queries for the versioned-table layer (the Delta-equivalent
   * log surface: time travel, RESTORE, MERGE-through-the-log, file-granular
@@ -37,17 +38,6 @@ object VersionedQueries {
     t(s, dir, "orders").filter(col("o_orderkey") < 20000)
   private def customerSlice(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "customer").filter(col("c_custkey") < 5000)
-
-  /** Stage timer for the fixture choreographies (Bench/TimeQ set
-    * graft.bench.stages): prints `bench-stage <fx> <name> <sec>` so a
-    * fixture regression names its SEGMENT (commit vs stream-fold vs
-    * consumer cycle), not just its total. Zero cost when unset. */
-  private def stage[T](fx: String, name: String)(body: => T): T =
-    if (sys.props.get("graft.bench.stages").contains("true")) {
-      val t0 = System.nanoTime()
-      try body finally println("bench-stage " + fx + " " + name + " " +
-        graft.util.Fmt.fmt("%.3f", (System.nanoTime() - t0) / 1e9))
-    } else body
 
   /** Run a fixture choreography under a small shuffle-partition count,
     * restoring the session value after. The scratch tables are a few

@@ -182,21 +182,25 @@ object Streams {
       .partitionBy("ingest_batch")
       .parquet(dir)
 
-  /** Continuous MERGE into a parquet lakehouse table — the standard
+  /** Continuous MERGE into a versioned lakehouse table — the standard
     * CDC-ingest sink shape: each micro-batch is reduced to its latest row
     * per key (intra-batch CDC ordering by `orderCol`; remaining columns
     * tie-break so the winner is a DETERMINISTIC total order, which makes a
-    * checkpoint-replayed batch upsert the same row again), then upserted
-    * via the atomic-swap [[graft.io.Upsert]].
+    * checkpoint-replayed batch upsert the same row again). The first
+    * non-empty batch bootstraps the table with
+    * [[graft.io.VersionedTable.append]]; every later batch is a
+    * [[graft.io.VersionedTable.merge]] that rewrites only the files its
+    * keys hit. Read the target with [[graft.io.VersionedTable.snapshot]].
+    * A target that already holds plain parquet (the layout this sink
+    * wrote before it was versioned) fails the query without touching a
+    * file; migrate it as [[requireNoPlainParquet]] says.
     *
-    * Each upsert retires the previous table version next to the target;
-    * `vacuumRetired` (default on) deletes versions older than
-    * `retainMs` after every batch — leave it on for continuous streams or
-    * disk grows by one table copy per micro-batch.
+    * Each merge retires the files it rewrote; `vacuumRetired` (default
+    * on) runs [[graft.io.VersionedTable.vacuum]] after every batch,
+    * deleting files retired longer than `retainMs` ago.
     *
-    * Scale: state-free — all heavy lifting is the batch merge join, which
-    * inherits Upsert's AQE broadcast of small CDC batches against the big
-    * target. */
+    * Scale: state-free — all heavy lifting is the merge's hit-file scan
+    * and join, which AQE broadcasts for small CDC batches. */
   def mergeSink(events: DataFrame, targetPath: String, keys: Seq[String],
       orderCol: String, checkpoint: String,
       trigger: org.apache.spark.sql.streaming.Trigger =
@@ -232,14 +236,39 @@ object Streams {
             withJson, keys, orderCol, ascending = false,
             tieBreakers = if (unord.isEmpty) ties else ties :+ tieJson)
             .drop(tieJson)
-          graft.io.Upsert.upsertParquet(
-            batch.sparkSession, latest, targetPath, keys)
-          if (vacuumRetired)
-            graft.io.Maintenance.vacuum(targetPath, retainMs)
+          val vt = graft.io.VersionedTable
+          if (vt.latestVersion(targetPath).isEmpty) {
+            requireNoPlainParquet(batch.sparkSession, targetPath)
+            vt.append(batch.sparkSession, latest, targetPath)
+          } else vt.merge(batch.sparkSession, latest, targetPath, keys)
+          if (vacuumRetired) vt.vacuum(targetPath, retainMs)
         }
         ()
       }
       .start()
+
+  /** Refuses to bootstrap a versioned table over plain Spark parquet
+    * output (`part-*` files or `k=v` partition dirs, e.g. a target the
+    * pre-versioned mergeSink wrote): the log-less files would be ignored
+    * by the new table and then deleted by its vacuum as unreferenced
+    * orphans. Orphans of a crashed versioned bootstrap are named
+    * `<id>-part*` and hidden `_tmp-*` dirs are skipped, so those still
+    * heal on replay. */
+  private def requireNoPlainParquet(spark: SparkSession,
+      targetPath: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(targetPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val plain = fs.exists(p) && fs.listStatus(p).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".") &&
+        (st.isDirectory || n.startsWith("part-"))
+    }
+    if (plain) throw new IllegalStateException(
+      s"$targetPath holds plain parquet files but no versioned-table log; " +
+      "mergeSink writes a VersionedTable and would orphan them. Migrate " +
+      "first: VersionedTable.append(spark, spark.read.parquet(<old path>), " +
+      "<new path>), then point the sink at the new path.")
+  }
 
   /** True iff the directory holds at least one COMMITTED data file —
     * `fs.exists` alone is not loadability: a crash mid-write leaves the

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.functions._
 
 import graft.io.{CommitArbiter, FileObjectStore, InMemoryObjectStore,
-  ObjectStore, ObjectStoreArbiter, Upsert, VersionedTable => VT}
+  ObjectStore, ObjectStoreArbiter, VersionedTable => VT}
 
 /** The [[graft.io.CommitArbiter]] contract, run against BOTH shipped
   * arbiters — the POSIX default and the in-memory conditional-put model
@@ -175,7 +175,7 @@ class CommitArbiterContractSpec extends SparkSpec {
         VT.append(spark, df(1 -> "a"), t)                    // v0
       }
       withRacer(VT.append(spark, df(9 -> "z"), t)) {
-        intercept[Upsert.ConcurrentWriteException] {
+        intercept[VT.ConcurrentWriteException] {
           VT.compact(spark, t, targetFiles = 1,
             isolation = VT.Isolation.Serializable)
         }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import graft.config.{EnvConfig, Thresholds}
 import graft.generator.DataGenerator
 import graft.gold.FintechGold
+import graft.io.VersionedTable
 import graft.ops.SilverPipeline
 
 class FintechSpec extends SparkSpec {
@@ -184,12 +185,17 @@ class FintechSpec extends SparkSpec {
   test("maintenance runner honors the enableOptimization flag") {
     val root = Files.createTempDirectory("maint").toString
     val path = s"$root/t"
-    silverTxns.limit(100).write.parquet(path)
+    VersionedTable.append(spark, silverTxns.limit(100).repartition(12), path,
+      optimizeWrite = false)
+    val v0 = VersionedTable.latestVersion(path)
     assert(!Pipeline.runMaintenance(spark, EnvConfig.dev(root), path,
-      Seq("transaction_date")))
+      Seq("transaction_date"), targetFiles = 4))
+    assert(VersionedTable.latestVersion(path) == v0) // dev: no commit
     assert(Pipeline.runMaintenance(spark, EnvConfig.prod(root), path,
-      Seq("transaction_date")))
-    assert(spark.read.parquet(path).count() == 100)
+      Seq("transaction_date"), targetFiles = 4))
+    val snap = VersionedTable.snapshot(spark, path)
+    assert(snap.inputFiles.length <= 4)
+    assert(snap.count() == 100)
   }
 
   test("DQ report failures map to severity-routed alerts") {

@@ -6,6 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.io.VersionedTable
 import graft.streaming.Streams
 
 class StreamingSpec extends SparkSpec {
@@ -126,14 +127,35 @@ class StreamingSpec extends SparkSpec {
     }
     // batch 1: keys 1,2 (key 1 twice — later ts must win inside the batch)
     run(Seq(ev(1, 10, 1, 1.0), ev(1, 10, 5, 7.0), ev(2, 20, 2, 2.0)), "b1")
-    val after1 = spark.read.parquet(tgt)
+    val after1 = VersionedTable.snapshot(spark, tgt)
       .select("event_id", "value").as[(Long, Double)].collect().toMap
     assert(after1 == Map(1L -> 7.0, 2L -> 2.0))
     // batch 2: update key 2, insert key 3
     run(Seq(ev(2, 20, 9, 9.0), ev(3, 30, 9, 3.0)), "b2")
-    val after2 = spark.read.parquet(tgt)
+    val after2 = VersionedTable.snapshot(spark, tgt)
       .select("event_id", "value").as[(Long, Double)].collect().toMap
     assert(after2 == Map(1L -> 7.0, 2L -> 9.0, 3L -> 3.0))
+  }
+
+  test("streaming merge sink refuses a plain-parquet target, deletes nothing") {
+    val src = Files.createTempDirectory("cdc-src").toString
+    val tgt = Files.createTempDirectory("cdc-tgt").toString + "/table"
+    val ckpt = Files.createTempDirectory("cdc-ckpt").toString
+    val ev = Seq((1L, Timestamp.valueOf("2024-01-01 00:00:01"), 10L, "upd",
+      1.0)).toDF("event_id", "ts", "user_id", "event_type", "value")
+    ev.write.parquet(tgt)
+    ev.write.parquet(s"$src/b1")
+    def listing = Files.list(java.nio.file.Paths.get(tgt)).toArray
+      .map(_.toString).sorted.toSeq
+    val before = listing
+    val q = Streams.mergeSink(Streams.eventsStream(spark, s"$src/*"),
+      tgt, keys = Seq("event_id"), orderCol = "ts", checkpoint = ckpt)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q.awaitTermination(60000))
+    assert(e.getMessage.contains("no versioned-table log"))
+    assert(listing == before)
+    assert(VersionedTable.latestVersion(tgt).isEmpty)
+    assert(spark.read.parquet(tgt).count() == 1)
   }
 
   test("streaming dedup ingest filters each batch against the kept index") {

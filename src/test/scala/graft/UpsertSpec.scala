@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions.col
 
-import graft.io.{Maintenance, Upsert, Writers}
+import graft.io.{Upsert, VersionedTable, Writers}
 
 class UpsertSpec extends SparkSpec {
   import spark.implicits._
@@ -42,139 +42,60 @@ class UpsertSpec extends SparkSpec {
     assert(st == Upsert.MergeStats(inserted = 1, updated = 1))
   }
 
-  test("upsertParquet bootstraps, merges atomically, vacuum GCs retired") {
+  test("append bootstraps, stats computed before merge, vacuum keeps merged rows") {
     val dir = Files.createTempDirectory("upsert").toString
     val path = s"$dir/t"
-    val st1 = Upsert.upsertParquet(spark, target, path, Seq("id"))
-    assert(st1 == Upsert.MergeStats(3, 0))
-    val st2 = Upsert.upsertParquet(spark, source, path, Seq("id"))
-    assert(st2 == Upsert.MergeStats(1, 1))
-    val back = spark.read.parquet(path).orderBy("id").collect()
+    VersionedTable.append(spark, target, path)
+    val st = Upsert.mergeStats(VersionedTable.snapshot(spark, path), source,
+      Seq("id"))
+    assert(st == Upsert.MergeStats(inserted = 1, updated = 1))
+    val liveBefore = VersionedTable.snapshot(spark, path).inputFiles.toSet
+    VersionedTable.merge(spark, source, path, Seq("id"))
+    val back = VersionedTable.snapshot(spark, path).orderBy("id").collect()
     assert(back.length == 4)
     assert(back(1).getAs[Double]("amount") == 99.0)
-    // one retired dir from the swap; vacuum with retain=0 removes it
-    assert(Maintenance.vacuum(path, retainMs = 0) == 1)
-    assert(spark.read.parquet(path).count() == 4)
-  }
-
-  test("upsertParquet enforces the single-writer contract via lock file") {
-    val dir = Files.createTempDirectory("upsert-lock").toString
-    val path = s"$dir/t"
-    Upsert.upsertParquet(spark, target, path, Seq("id"))
-    // a held lock (another writer mid-flight) makes the next writer fail
-    // loudly instead of silently racing the directory swap
-    val lock = Paths.get(s"$path.lock")
-    Files.createFile(lock)
-    intercept[Upsert.ConcurrentWriteException] {
-      Upsert.upsertParquet(spark, source, path, Seq("id"))
-    }
-    assert(spark.read.parquet(path).count() == 3) // target untouched
-    // a STALE lock (dead writer) is broken automatically and the upsert
-    // proceeds; the lock is released afterwards
-    Files.setLastModifiedTime(lock,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 2L * 60 * 60 * 1000))
-    val st = Upsert.upsertParquet(spark, source, path, Seq("id"))
-    assert(st == Upsert.MergeStats(1, 1))
-    assert(!Files.exists(lock))
-    // normal completion leaves no lock either
-    Upsert.upsertParquet(spark, source, path, Seq("id"))
-    assert(!Files.exists(lock))
-  }
-
-  test("compact and clusterBy serialize under the SAME writer lock as " +
-    "upsert (an unlocked maintenance swap could erase a racing merge)") {
-    val dir = Files.createTempDirectory("maint-lock").toString
-    val path = s"$dir/t"
-    Upsert.upsertParquet(spark, target, path, Seq("id"))
-    val lock = Paths.get(s"$path.lock")
-    Files.createFile(lock)
-    intercept[Upsert.ConcurrentWriteException] {
-      Maintenance.compact(spark, path, targetFiles = 1)
-    }
-    intercept[Upsert.ConcurrentWriteException] {
-      Maintenance.clusterBy(spark, path, Seq("id"), targetFiles = 1)
-    }
-    assert(spark.read.parquet(path).count() == 3) // table untouched
-    Files.delete(lock)
-    Maintenance.compact(spark, path, targetFiles = 1)
-    assert(!Files.exists(lock)) // released on completion
-    assert(spark.read.parquet(path).count() == 3)
-  }
-
-  test("upsertParquet preserves a partitioned layout") {
-    val dir = Files.createTempDirectory("upsert-part").toString
-    val path = s"$dir/t"
-    val t0 = Seq((1, "x", 10.0), (2, "y", 20.0)).toDF("id", "part", "amount")
-    val s0 = Seq((2, "y", 99.0), (3, "x", 30.0)).toDF("id", "part", "amount")
-    Upsert.upsertParquet(spark, t0, path, Seq("id"), partitionBy = Seq("part"))
-    Upsert.upsertParquet(spark, s0, path, Seq("id"), partitionBy = Seq("part"))
-    // partition directories exist and content merged
-    assert(Files.exists(Paths.get(s"$path/part=x")))
-    val back = spark.read.parquet(path).orderBy("id").collect()
-    assert(back.length == 3)
-    assert(back(1).getAs[Double]("amount") == 99.0)
+    // vacuum with retain=0 deletes exactly the files the merge retired
+    // (the one holding id 2 among them) and the merged snapshot still
+    // reads whole
+    val retired = liveBefore --
+      VersionedTable.snapshot(spark, path).inputFiles.toSet
+    assert(retired.nonEmpty)
+    assert(VersionedTable.vacuum(path, retainMs = 0) == retired.size)
+    assert(VersionedTable.snapshot(spark, path).count() == 4)
   }
 
   test("maintenance compact reduces file count, preserves rows") {
     val dir = Files.createTempDirectory("compact").toString
     val path = s"$dir/t"
-    Tables.load(spark, sfDir, "lineitem").repartition(16)
-      .write.parquet(path)
-    val before = Files.list(Paths.get(path)).filter(_.toString.endsWith(".parquet")).count()
-    val n = spark.read.parquet(path).count()
-    Maintenance.compact(spark, path, targetFiles = 2)
-    val after = Files.list(Paths.get(path)).filter(_.toString.endsWith(".parquet")).count()
+    VersionedTable.append(spark,
+      Tables.load(spark, sfDir, "lineitem").repartition(16), path,
+      optimizeWrite = false)
+    def liveFiles = VersionedTable.snapshot(spark, path).inputFiles.length
+    val before = liveFiles
+    val n = VersionedTable.snapshot(spark, path).count()
+    VersionedTable.compact(spark, path, targetFiles = 2)
+    val after = liveFiles
     assert(before > after && after <= 2)
-    assert(spark.read.parquet(path).count() == n)
-    Maintenance.vacuum(path, retainMs = 0)
-  }
-
-  test("compact preserves partition layout and string partition values") {
-    val dir = Files.createTempDirectory("compactp").toString
-    val path = s"$dir/t"
-    // "007" is the inference trap: a naive read+rewrite turns it into
-    // int 7 and flattens the directory layout entirely
-    Seq(("007", 1L), ("007", 2L), ("12", 3L)).toDF("acct", "v")
-      .repartition(8).write.partitionBy("acct").parquet(path)
-    Maintenance.compact(spark, path, targetFiles = 1)
-    assert(Files.exists(Paths.get(s"$path/acct=007")))
-    assert(Files.exists(Paths.get(s"$path/acct=12")))
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prev = spark.conf.get(inferKey)
-    val got =
-      try {
-        spark.conf.set(inferKey, "false")
-        spark.read.parquet(path).select("acct", "v")
-          .as[(String, Long)].collect().toSet
-      } finally spark.conf.set(inferKey, prev)
-    assert(got == Set(("007", 1L), ("007", 2L), ("12", 3L)))
-    // nested layouts are detected in order
-    assert(Maintenance.partitionColumnsOf(path) == Seq("acct"))
-    Maintenance.vacuum(path, retainMs = 0)
-  }
-
-  test("clusterBy preserves a two-level partition layout") {
-    val dir = Files.createTempDirectory("clusterp").toString
-    val path = s"$dir/t"
-    Seq(("a", "01", 3L), ("a", "02", 1L), ("b", "01", 2L))
-      .toDF("x", "mon", "v").write.partitionBy("x", "mon").parquet(path)
-    assert(Maintenance.partitionColumnsOf(path) == Seq("x", "mon"))
-    Maintenance.clusterBy(spark, path, Seq("v"), targetFiles = 1)
-    assert(Files.exists(Paths.get(s"$path/x=a/mon=02")))
-    assert(Files.exists(Paths.get(s"$path/x=b/mon=01")))
-    assert(spark.read.parquet(path).count() == 3L)
-    Maintenance.vacuum(path, retainMs = 0)
+    assert(VersionedTable.snapshot(spark, path).count() == n)
+    VersionedTable.vacuum(path, retainMs = 0)
+    assert(VersionedTable.snapshot(spark, path).count() == n)
   }
 
   test("clusterBy rewrite preserves content and sorts within files") {
     val dir = Files.createTempDirectory("cluster").toString
     val path = s"$dir/t"
-    Tables.load(spark, sfDir, "orders").write.parquet(path)
-    val n = spark.read.parquet(path).count()
-    Maintenance.clusterBy(spark, path, Seq("o_orderdate"), targetFiles = 4)
-    assert(spark.read.parquet(path).count() == n)
-    Maintenance.vacuum(path, retainMs = 0)
+    VersionedTable.append(spark, Tables.load(spark, sfDir, "orders"), path)
+    val n = VersionedTable.snapshot(spark, path).count()
+    VersionedTable.compact(spark, path, targetFiles = 4,
+      clusterBy = Seq("o_orderdate"))
+    val snap = VersionedTable.snapshot(spark, path)
+    assert(snap.count() == n)
+    snap.inputFiles.foreach { f =>
+      val dates = spark.read.parquet(f).select("o_orderdate")
+      assert(dates.collect().toSeq == dates.orderBy("o_orderdate").collect()
+        .toSeq, s"$f is not sorted on o_orderdate")
+    }
+    VersionedTable.vacuum(path, retainMs = 0)
   }
 
   test("schema evolution: readMerged unions columns across file versions") {

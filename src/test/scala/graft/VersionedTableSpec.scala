@@ -5,7 +5,7 @@ import java.util.Comparator
 
 import org.apache.spark.sql.functions._
 
-import graft.io.{Upsert, VersionedTable => VT}
+import graft.io.{VersionedTable => VT}
 
 class VersionedTableSpec extends SparkSpec {
   import spark.implicits._
@@ -378,7 +378,7 @@ class VersionedTableSpec extends SparkSpec {
     withTable { t =>
       VT.append(spark, df(1 -> "a"), t)                      // v0
       withRacer(VT.append(spark, df(9 -> "z"), t)) {
-        intercept[Upsert.ConcurrentWriteException] {
+        intercept[VT.ConcurrentWriteException] {
           VT.compact(spark, t, targetFiles = 1,
             isolation = VT.Isolation.Serializable)
         }
@@ -393,7 +393,7 @@ class VersionedTableSpec extends SparkSpec {
     withTable { t =>
       VT.append(spark, df(1 -> "a", 2 -> "b"), t)            // v0
       withRacer(VT.deleteWhereDeferred(spark, t, col("id") === 1)) {
-        intercept[Upsert.ConcurrentWriteException] {
+        intercept[VT.ConcurrentWriteException] {
           VT.merge(spark, df(2 -> "B"), t, Seq("id"))
         }
       }
@@ -447,7 +447,7 @@ class VersionedTableSpec extends SparkSpec {
     withTable { t =>
       VT.append(spark, df(1 -> "a"), t)                   // v0
       VT.append(spark, df(2 -> "b"), t)                   // v1 (interloper)
-      intercept[Upsert.ConcurrentWriteException] {
+      intercept[VT.ConcurrentWriteException] {
         VT.overwrite(spark, df(9 -> "z"), t, expectVersion = Some(0))
       }
       assert(VT.snapshot(spark, t).count() == 2)
@@ -1301,7 +1301,7 @@ class VersionedTableSpec extends SparkSpec {
     withTable { t =>
       VT.append(spark, df(1 -> "a"), t)
       withRacer(VT.setProperties(t, Map("owner" -> "ops"))) {
-        intercept[Upsert.ConcurrentWriteException] {
+        intercept[VT.ConcurrentWriteException] {
           VT.merge(spark, df(1 -> "A"), t, Seq("id"))
         }
       }
